@@ -71,14 +71,14 @@ private[graft] object QueriesDedup {
               FpStore.read(s, store), "fp")
             .select(col("doc_id"), col("fp"))
             .write.mode("overwrite").parquet(s"$sink/$tag")
-          FpStore.append(s, store, s.read.parquet(s"$sink/$tag"))
+          FpStore.append(s, store, Tables.parquet(s, s"$sink/$tag"))
         }
         ingest(docs.filter(col("doc_id") % 4 === 2), "b1")
         ingest(docs.filter(col("doc_id") % 4 === 3), "b2")
         FpStore.compact(s, store)
         graft.api.DataTable(
-          s.read.parquet(s"$sink/b1").withColumn("batch", lit(1L))
-            .unionByName(s.read.parquet(s"$sink/b2").withColumn("batch", lit(2L))))
+          Tables.parquet(s, s"$sink/b1").withColumn("batch", lit(1L))
+            .unionByName(Tables.parquet(s, s"$sink/b2").withColumn("batch", lit(2L))))
           .arrange("doc_id").df
       }),
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, ModelStore, Similarity}
+import graft.sources.Tables
 
 /** In-engine compensating scale evidence for the ONE ledger row whose
   * DuckDB oracle is priced out at sf10: `q_ann_ivfpq`'s replay (PQ
@@ -85,7 +86,7 @@ object ScaleCheck {
     * per cluster. Integer mismatch count; 0 = the two CC
     * implementations agree on every one of the N docs. */
   private[graft] def winnowCc(spark: SparkSession, sfDir: String): WinnowCcResult = {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = Tables.df(spark, sfDir, "documents")
     // one candidate computation feeds BOTH sides: the propagation edges
     // and clusterByPairs (whose public wrapper clusterByWinnow would
     // recompute the dominant fingerprint/bucket/pair stage end-to-end)
@@ -137,7 +138,7 @@ object ScaleCheck {
   private[graft] def ivfPq(spark: SparkSession, sfDir: String, nq: Int): IvfPqResult = {
     val k = 10
 
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val emb = Tables.df(spark, sfDir, "embeddings")
     val qs = emb.filter(col("vec_id") < nq)
 
     // same training parameters as q_ann_ivfpq (QueriesVector.scala)

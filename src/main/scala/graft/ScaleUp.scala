@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.Tables
 
 /** Dev tool: synthesize a 10x scale point from sf0.1 for the slope
   * rehearsal (the tri-scale audit tops out at ~600k lineitem rows; the
@@ -120,7 +121,7 @@ object ScaleUp {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    def read(t: String) = spark.read.parquet(s"$src/$t.parquet")
+    def read(t: String) = Tables.df(spark, src, t)
 
     // Stride from the data ([[strideFor]]); per-copy tag letters and
     // the in-block substitution offset rotate with the stride magnitude
@@ -167,7 +168,7 @@ object ScaleUp {
 
     tables.foreach { case (name, df) =>
       df.write.mode("overwrite").parquet(s"$out/$name.parquet")
-      println(s"[scaleup] $name: ${spark.read.parquet(s"$out/$name.parquet").count()} rows")
+      println(s"[scaleup] $name: ${Tables.df(spark, out, name).count()} rows")
     }
     spark.stop()
   }

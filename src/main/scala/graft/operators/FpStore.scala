@@ -5,6 +5,7 @@ import java.util.Comparator
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.Tables
 
 /** Maintained fingerprint store — the persistent state behind the
   * incremental dedup stages ([[Dedup.exactIncrementalAgainstFps]],
@@ -110,7 +111,7 @@ object FpStore {
   def read(spark: SparkSession, path: String): DataFrame = {
     val ds = deltaDirs(path)
     require(ds.nonEmpty, s"FpStore.read: no store at $path")
-    spark.read.parquet(ds.map(_._2.toString): _*)
+    Tables.parquet(spark, ds.map(_._2.toString): _*)
   }
 
   /** Merge every delta into one distinct, sorted delta. Publishes the

@@ -5,6 +5,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.sources.Tables
 
 /** Versioned trained-artifact store — the production seam between
   * "train" and "score" that the per-query retraining pattern lacks: a
@@ -151,7 +152,7 @@ object ModelStore {
             s"(have ${ds.map(_._1).mkString(",")})"))
     // explicit file: URI — versions live on the driver-local FS by
     // contract; a bare path would resolve against a remote fs.defaultFS
-    spark.read.parquet(p.toUri.toString)
+    Tables.parquet(spark, p.toUri.toString)
   }
 
   /** Keep the newest `keep` versions of `kind`, unlink the rest and any

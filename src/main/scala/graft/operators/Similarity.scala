@@ -30,6 +30,20 @@ object Similarity {
     StructField("query_id", LongType), StructField("vec_id", LongType),
     StructField("cos", DoubleType)))
 
+  /** The one id projection of this module: ids must be numeric. A
+    * non-null id that does not cast to a long (a string doc id, NaN)
+    * fails the query in-plan, whatever the ANSI setting — turning it
+    * null instead would null-drop every row of the `vec_id =!= query_id`
+    * filter and return a silently empty top-k. A plain projection: no
+    * extra job. */
+  private def longId(id: Column): Column = {
+    val l = id.try_cast("long")
+    when(id.isNotNull && l.isNull, raise_error(concat(
+      lit("Similarity: ids must be numeric (castable to long), got '"),
+      id.cast("string"), lit("'"))))
+      .otherwise(l)
+  }
+
   /** Per-partition top-k prune: keeps, per query, the k best (cos desc,
     * vec_id asc) rows of each partition, deduplicating (query, vec) within
     * the partition. Exact-preserving: the global top-k distinct rows are a
@@ -49,8 +63,8 @@ object Similarity {
     val ord = Ordering.by[(Long, Double), (Double, Long)] {
       case (id, cos) => (-cos, id) // best = smallest (-cos, id)
     }
-    scored.select(col("query_id").cast("long"), col("vec_id").cast("long"),
-        col("cos").cast("double"))
+    scored.select(longId(col("query_id")).as("query_id"),
+        longId(col("vec_id")).as("vec_id"), col("cos").cast("double"))
       // malformed vectors score NULL and zero-norm vectors score NaN —
       // neither is a usable neighbor, and letting NaN through would rank
       // FIRST in the final desc window (Spark's NaN-greatest order)
@@ -141,10 +155,10 @@ object Similarity {
   def hardNegatives(corpus: DataFrame, anchors: DataFrame,
                     vecCol: String, idCol: String, labelCol: String,
                     k: Int): DataFrame = {
-    val c = corpus.select(col(idCol).as("vec_id"), col(vecCol).as("cv"),
+    val c = corpus.select(longId(col(idCol)).as("vec_id"), col(vecCol).as("cv"),
       col(labelCol).as("__cl"))
       .withColumn("__cn", sqrt(dot(col("cv"), col("cv"))))
-    val a = anchors.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
+    val a = anchors.select(longId(col(idCol)).as("query_id"), col(vecCol).as("qv"),
       col(labelCol).as("__al"))
       .withColumn("__qn", sqrt(dot(col("qv"), col("qv"))))
     val scored = c.join(broadcast(a), col("__cl") =!= col("__al"))
@@ -356,7 +370,7 @@ object Similarity {
   }
 
   private def normalized(corpus: DataFrame, vecCol: String, idCol: String) =
-    corpus.select(col(idCol).cast("long").as("vec_id"),
+    corpus.select(longId(col(idCol)).as("vec_id"),
       toDoubleArray(col(vecCol)).as("v"))
 
   /** Cell assignment as a pure projection against literal centroids
@@ -645,9 +659,9 @@ object Similarity {
   def semanticJoin(left: DataFrame, right: DataFrame, vecCol: String,
                    leftIdCol: String, rightIdCol: String,
                    minCos: Double = 0.5): DataFrame = {
-    val l = left.select(col(leftIdCol).cast("long").as("query_id"),
+    val l = left.select(longId(col(leftIdCol)).as("query_id"),
       toDoubleArray(col(vecCol)).as("qv"))
-    val r = right.select(col(rightIdCol).cast("long").as("vec_id"),
+    val r = right.select(longId(col(rightIdCol)).as("vec_id"),
       col(vecCol).as("cv"))
     val scored = r.withColumn("__cn", sqrt(dot(col("cv"), col("cv"))))
       .crossJoin(broadcast(l.withColumn("__qn",
@@ -658,7 +672,7 @@ object Similarity {
     val best = rankTopK(partitionTopK(scored, 1), 1)
       .select(col("query_id"), col("vec_id").as("match_id"),
         col("cos").as("match_cos"))
-    left.select(col(leftIdCol).cast("long").as(leftIdCol))
+    left.select(longId(col(leftIdCol)).as(leftIdCol))
       .join(best, col(leftIdCol) === col("query_id"), "left")
       .select(col(leftIdCol), col("match_id"), col("match_cos"))
   }
@@ -733,7 +747,7 @@ object Similarity {
     val cand = bruteForceTopK(corpus, queries, vecCol, idCol, queryIdCol,
       candidates)
     val withV = corpus
-      .select(col(idCol).cast("long").as("vec_id"),
+      .select(longId(col(idCol)).as("vec_id"),
         toDoubleArray(col(vecCol)).as("cv"))
       .join(broadcast(cand.select(col("query_id"), col("vec_id"),
         col("cos").as("rel"))), Seq("vec_id"))
@@ -841,7 +855,7 @@ object Similarity {
     //    localCheckpoint); without it the withColumn chain re-executes
     //    every prior round's cosines AND the plan tree grows per round.
     val sc = spark.sparkContext
-    val e = corpus.select(col(idCol).cast("long").as("vec_id"),
+    val e = corpus.select(longId(col(idCol)).as("vec_id"),
       toDoubleArray(col(vecCol)).as("v"))
       .filter(col("v").isNotNull)
     // Cache the two-column image BEFORE the seed scan: the seed

@@ -53,7 +53,7 @@ object Sinks {
     * `input_file_name` — no driver-side file walking. */
   def fileStats(spark: SparkSession, path: String,
                 cols: Seq[String]): DataFrame =
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
       .groupBy(input_file_name().as("file"))
       .agg(count(lit(1)).as("n_rows"),
         cols.flatMap(c => Seq(min(col(c)).as(s"${c}_min"),
@@ -90,7 +90,7 @@ object Sinks {
     require(!contains(qi, qo) && !contains(qo, qi),
       s"compactParquet: output $qo overlaps input $qi — the overwrite " +
         "would destroy the input mid-read")
-    val df = spark.read.parquet(inPath)
+    val df = Tables.parquet(spark, inPath)
     val n = df.count()
     val files = math.max(1, math.ceil(n.toDouble / targetRowsPerFile).toInt)
     df.repartition(files)

@@ -68,6 +68,27 @@ class BenchFormatSuite extends AnyFunSuite {
     assert(node.get("queries").get("q_failed_one").asInt() == -1)
   }
 
+  test("more failures than maxShown stay counted in an explicit failed field") {
+    // 45 failures against the 40-entry inline cap: the line can show at
+    // most 40 of them, so only "failed" carries the full count
+    val results = mkResults(120).zipWithIndex.map { case ((n, t), i) =>
+      if (i % 2 == 0 && i < 90) n -> (-1.0, -1.0) else n -> t
+    }
+    assert(results.count(_._2._2 < 0) == 45)
+    val line = BenchFormat.line(results, "/sf", budget = 1950)
+    val node = mapper.readTree(line)
+    assert(node.get("failed").asInt() == 45)
+    val qs = node.get("queries")
+    assert(qs.size() <= 40)
+    val shownFailed = results.count { case (n, _) =>
+      qs.has(n) && qs.get(n).asInt() == -1 }
+    assert(shownFailed == qs.size(), "failures must fill the inline map first")
+    assert(node.get("rest").get("n").asInt() == 120 - qs.size())
+    // a clean run says so explicitly
+    assert(mapper.readTree(BenchFormat.line(mkResults(20), "/sf"))
+      .get("failed").asInt() == 0)
+  }
+
   test("pathological budget still terminates, keeping only what fits") {
     val line = BenchFormat.line(mkResults(120), "/sf", budget = 300)
     assert(line.length <= 300)

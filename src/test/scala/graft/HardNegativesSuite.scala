@@ -25,6 +25,35 @@ class HardNegativesSuite extends SparkSpec {
       |  (4L, array(0.0F, 1.0F), 2)
       |AS t(vec_id, embedding, label)""".stripMargin)
 
+  test("non-numeric ids fail loudly instead of a silently empty top-k") {
+    // 'doc-3' casts to a NULL long; before the in-plan check every row
+    // then null-dropped out of `vec_id =!= query_id` (ANSI off) and the
+    // top-k came back empty
+    val sv = vecs.withColumn("vec_id", concat(lit("doc-"), col("vec_id")))
+    def failsLoudly(run: => Any): Unit = {
+      val e = intercept[Exception](run)
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(t => String.valueOf(t.getMessage))
+      assert(msgs.exists(_.contains("ids must be numeric")), e.getMessage)
+    }
+    Seq("false", "true").foreach { ansi =>
+      val old = spark.conf.get("spark.sql.ansi.enabled")
+      spark.conf.set("spark.sql.ansi.enabled", ansi)
+      try {
+        failsLoudly(Similarity.bruteForceTopK(sv, sv, "embedding", "vec_id",
+          "vec_id", 2).collect())
+        failsLoudly(Similarity.hardNegatives(sv, sv, "embedding", "vec_id",
+          "label", 2).collect())
+        failsLoudly(Similarity.semanticJoin(sv, sv, "embedding", "vec_id",
+          "vec_id").collect())
+      } finally spark.conf.set("spark.sql.ansi.enabled", old)
+    }
+    // numeric ids of any integral type still run (int ids widen)
+    val iv = vecs.withColumn("vec_id", col("vec_id").cast("int"))
+    assert(Similarity.bruteForceTopK(iv, iv, "embedding", "vec_id",
+      "vec_id", 2).count() == 10)
+  }
+
   test("ranks different-label vectors by cosine, same-label never surfaces") {
     val out = Similarity.hardNegatives(
       corpus = vecs, anchors = vecs.filter(col("vec_id") === 0),

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.api.DataTable
@@ -50,6 +52,38 @@ trait SparkSpec extends AnyFunSuite {
   }
 
   def rowCount(df: DataFrame): Long = df.count()
+
+  /** Runs `body` and returns its result with the call site of every
+    * Spark job it launched. Jobs are matched by a fresh job group; a
+    * sentinel job in a second group runs afterwards, and since the
+    * listener bus delivers events in order, seeing the sentinel start
+    * means every job of `body` has been seen too. */
+  def jobsDuring[T](body: => T): (T, Seq[String]) = {
+    val sc = spark.sparkContext
+    val group = s"jobs-during-${java.util.UUID.randomUUID()}"
+    val sentinel = s"$group-sentinel"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group`    =>
+            seen.add(e.stageInfos.sortBy(_.stageId).headOption.map(_.name).getOrElse(""))
+          case `sentinel` => done.countDown()
+          case _          => ()
+        }
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(group, group)
+      val r = try body finally sc.clearJobGroup()
+      sc.setJobGroup(sentinel, sentinel)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener never saw the sentinel job")
+      (r, seen.asScala.toSeq)
+    } finally sc.removeSparkListener(l)
+  }
 }
 
 object SparkSpec {

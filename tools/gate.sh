@@ -11,6 +11,16 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
+# Every parquet source resolves its schema on the driver through
+# graft.sources.Tables.parquet; a bare read.parquet( would bring back the
+# one-task schema-inference job at query construction.
+echo "== gate: parquet reads go through Tables.parquet =="
+if grep -rn --include='*.scala' 'read\.parquet(' src/main \
+    | grep -v '^src/main/scala/graft/sources/Tables\.scala:'; then
+  echo "gate: FAIL — read parquet via graft.sources.Tables.parquet" >&2
+  exit 1
+fi
+
 echo "== gate: Test/compile + suite =="
 sbt -batch 'Test/compile' test
 
