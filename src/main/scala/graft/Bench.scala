@@ -3,15 +3,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     val loadStart = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
     // Warm up codegen/shuffle machinery so the first timed query doesn't
@@ -32,11 +24,10 @@ object Bench {
         }
       // a failed query must not masquerade as a fast one
       val dt: Double = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-      // The noop write consumed the result fully, so the plain
-      // withGlobalRanks/withGlobalLag snapshots pinned by this run are
-      // safe to drop — without this, the 4 shots of q_global_rank pin 4
-      // cached copies of the keyed table in one JVM. Outside the timed
-      // span.
+      // The noop write consumed the result fully, so this run's
+      // PlanCache pins are safe to drop — without this, every pinning
+      // query's shared subtrees stay cached in one JVM. Outside the
+      // timed span.
       graft.operators.GlobalOps.releaseSnapshots()
       dt
     }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Bench a subset of queries by name (iteration tool):
   * `runMain graft.BenchOne q_minhash_pairs q_lang_id`. Same session
@@ -30,15 +29,7 @@ object BenchOne {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     spark.range(1000).selectExpr("sum(id)").write.format("noop").mode("overwrite").save()
 
     def shot(name: String): Double = {
@@ -47,9 +38,7 @@ object BenchOne {
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       val dt = (System.nanoTime() - t0) / 1e9
       // same lifecycle as Bench: the noop write fully consumed the
-      // result, so per-shot rank/shift snapshots are safe to drop —
-      // without this, repeated shots of a global-window query pin one
-      // cached copy of the keyed table each
+      // result, so this shot's PlanCache pins are safe to drop
       graft.operators.GlobalOps.releaseSnapshots()
       dt
     }

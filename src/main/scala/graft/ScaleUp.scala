@@ -112,14 +112,7 @@ object ScaleUp {
   def main(args: Array[String]): Unit = {
     require(args.length == 2, "usage: ScaleUp <srcSfDir> <outDir>")
     val (src, out) = (args(0), args(1))
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
 
     def read(t: String) = Tables.df(spark, src, t)
 

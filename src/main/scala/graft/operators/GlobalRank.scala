@@ -33,24 +33,16 @@ import org.apache.spark.sql.functions._
   * everything — is not an alternative.
   *
   * Cross-job alignment: pass 1's offsets are only valid if pass 2 lands
-  * every row in the same range partition. This does NOT come for free —
-  * Spark's range boundaries are reservoir-sampled with a seed that
-  * involves the materialization-specific RDD id, so two separate jobs
-  * planning the same `repartitionByRange` derive DIFFERENT boundaries
-  * whenever ties/sampling make the quantile cut ambiguous (empirically:
-  * two count-by-pid jobs over sf0.01 lineitem disagreed on which side
-  * of a cut the l_quantity=26 group fell). The operator therefore
-  * `persist()`s the range-partitioned, pid-stamped snapshot: pass 1's
-  * stats collect materializes the cache, pass 2 ranks the SAME frozen
-  * rows, and even a cache-evicted partition recomputes through the one
-  * shared partitioner instance (boundaries are computed once per
-  * shuffle dependency, not per job). The cache is the price of a
-  * consistent cross-job snapshot — MEMORY_AND_DISK, one materialization
-  * of the keyed table, released by [[withGlobalRanksManaged]] or
-  * session end.
-  * The exchange also uses an EXPLICIT partition count (exempt from AQE
-  * coalescing, which is likewise per-job). Defense-in-depth: a pid in
-  * pass 2 with no pass-1 stats row — never a legitimate state — FAILS
+  * every row in the same range partition. Spark's own range boundaries
+  * are reservoir-sampled per materialization, so two jobs planning the
+  * same `repartitionByRange` can cut a tie group differently
+  * (empirically: two count-by-pid jobs over sf0.01 lineitem disagreed
+  * on which side of a cut the l_quantity=26 group fell). The operator
+  * therefore never lets Spark pick boundaries per job: [[RangeBuckets]]
+  * captures literal boundaries once and stamps the partition id as a
+  * pure projection, so both passes derive the identical partition for
+  * every row and nothing is persisted. Defense-in-depth: a pid in pass
+  * 2 with no pass-1 stats row — never a legitimate state — FAILS
   * LOUDLY via `raise_error` instead of silently nulling ranks. AQE with
   * forced coalescing and a parquet-backed source (the case that exposed
   * the boundary instability) are pinned in GlobalRankSuite.
@@ -62,45 +54,17 @@ import org.apache.spark.sql.functions._
   * nullable keys should `coalesce` them to a sentinel (or filter) first;
   * the rank arithmetic itself stays correct either way, only the
   * cross-engine tie order of the null group differs. */
-object GlobalRank extends SnapshotRegistry {
+object GlobalRank {
 
   /** Append global `rnk`/`drnk`/`prnk`/`cdist` over `order`. Tie-stable:
     * a non-unique order still yields deterministic values (ntile is
     * excluded here for exactly that reason — see DataTable.withNtile).
-    *
-    * The returned plan reads through a MEMORY_AND_DISK snapshot that must
-    * stay cached while the plan can still be executed (range boundaries
-    * are job-specific — see the alignment scaladoc on [[build]]), so this
-    * variant cannot self-release. The snapshot is tracked; call
-    * [[releaseSnapshots]] once the consuming action is done, or use
-    * [[withGlobalRanksManaged]] for scoped use. Without either, each call
-    * pins one keyed-table copy until session end. */
+    * Persists nothing: the returned plan can be executed any number of
+    * times, from any thread. */
   def withGlobalRanks(df: DataFrame, order: Seq[Column],
                       rankName: String = "rnk", denseName: String = "drnk",
-                      pctName: String = "prnk", cumeName: String = "cdist"): DataFrame = {
-    val (ranked, snap, _) = build(df, order, rankName, denseName, pctName, cumeName)
-    // register only when something is actually pinned: the empty-input
-    // short-circuit returns no snapshot, and a dead handle would make
-    // liveSnapshotCount over-report against getPersistentRDDs
-    register(snap)
-    ranked
-  }
-
-  /** Per-call-release twin of [[withGlobalRanks]]: returns the ranked
-    * frame plus an idempotent handle that unpersists ONLY this call's
-    * snapshot (true iff this invocation actually released it). Library
-    * code that can't use the [[withGlobalRanksManaged]] loan scope should
-    * prefer this over the process-wide [[releaseSnapshots]] wipe, which
-    * is only safe for a harness that owns every in-flight plain call.
-    * The same post-release rule applies: never execute the ranked plan
-    * again after releasing (see the alignment scaladoc on [[build]]). */
-  def withGlobalRanksReleasable(df: DataFrame, order: Seq[Column],
-                                rankName: String = "rnk", denseName: String = "drnk",
-                                pctName: String = "prnk", cumeName: String = "cdist")
-      : (DataFrame, () => Boolean) = {
-    val (ranked, snap, _) = build(df, order, rankName, denseName, pctName, cumeName)
-    (ranked, mkRelease(snap))
-  }
+                      pctName: String = "prnk", cumeName: String = "cdist"): DataFrame =
+    build(df, order, rankName, denseName, pctName, cumeName)._1
 
   /** Global `NTILE(buckets)` over a UNIQUE total order, two-pass — the
     * whole-table quantile bucketing a naive
@@ -113,10 +77,8 @@ object GlobalRank extends SnapshotRegistry {
     * take q+1 rows. All `IntegralDivide` arithmetic — exact past 2^53,
     * bit-replayable by a DuckDB `NTILE(b)` over the same order.
     *
-    * Same snapshot lifecycle as [[withGlobalRanks]] (registry-tracked;
-    * nothing persists on the split-point tier). Order-key nulls follow
-    * the family contract (NULLS FIRST — oracle parity for non-null keys
-    * only). */
+    * Order-key nulls follow the family contract (NULLS FIRST — oracle
+    * parity for non-null keys only). */
   def withGlobalNtile(df: DataFrame, buckets: Int, uniqueOrder: Seq[Column],
                       name: String = "bucket"): DataFrame = {
     require(buckets >= 1, s"withGlobalNtile: buckets=$buckets must be >= 1")
@@ -124,9 +86,8 @@ object GlobalRank extends SnapshotRegistry {
     import org.apache.spark.sql.graftshim.Shim
     val rn = "__nt_rn"
     val helpers = Seq("__nt_d", "__nt_p", "__nt_c")
-    val (ranked, snap, total) = build(df, uniqueOrder, rn, helpers(0),
+    val (ranked, total) = build(df, uniqueOrder, rn, helpers(0),
       helpers(1), helpers(2), requireUnique = true)
-    register(snap)
     val q = total / buckets
     val r = total % buckets
     def idiv(a: Column, d: Long): Column = Shim.toColumn(new IntegralDivide(
@@ -143,43 +104,25 @@ object GlobalRank extends SnapshotRegistry {
       .drop(rn +: helpers: _*)
   }
 
-  // snapshot registry (mkRelease/register/liveSnapshotCount/
-  // releaseSnapshots) inherited from SnapshotRegistry; a re-execution of
-  // a plain-variant plan after release re-derives job-specific range
-  // boundaries and corrupts ranks SILENTLY — library paths must use
-  // [[withGlobalRanksManaged]] or [[withGlobalRanksReleasable]]
-
-  /** Core: returns (ranked plan, the persisted snapshot it reads through
-    * — None on the deterministic split-point tier and on the empty-input
-    * short-circuit). */
+  /** Core: returns (ranked plan, total row count). */
   private def build(df: DataFrame, order: Seq[Column],
                     rankName: String, denseName: String,
                     pctName: String, cumeName: String,
-                    requireUnique: Boolean = false)
-      : (DataFrame, Option[DataFrame], Long) = {
+                    requireUnique: Boolean = false): (DataFrame, Long) = {
     require(order.nonEmpty, "withGlobalRanks: need at least one order column")
     val okNames = order.indices.map(i => s"__ok$i")
     val keyed = order.zip(okNames).foldLeft(df) { case (d, (c, n)) => d.withColumn(n, c) }
     val okCols = okNames.map(col)
-    // EXPLICIT partition count, not repartitionByRange(cols…): with the
-    // count left implicit, AQE is free to coalesce the range exchange,
-    // and it decides PER JOB — at sf0.1/local[32] the stats job and the
-    // rank job really did coalesce differently (caught by the
-    // misalignment guard below; before the guard, ranks went silently
-    // null). A user-specified count is exempt from AQE coalescing, so
-    // both jobs run the identical exchange.
+    // bucket count = the shuffle fan-out; buckets are a projection of
+    // the row, so AQE coalescing the pass exchanges (which it decides
+    // per job) cannot move a row to another bucket
     val numParts = df.sparkSession.sessionState.conf.numShufflePartitions
-    // bucketing tier (see RangeBuckets): a long/double-orderable first
-    // key gets deterministic literal split-point buckets — __pid is a
-    // pure projection, both passes align by construction, nothing
-    // persists (equal keys can never straddle a bucket boundary, the tie
-    // invariant the rank arithmetic builds on). Otherwise the legacy
-    // tier: persist BEFORE stamping anything downstream — range
-    // boundaries are job-specific (see scaladoc), so the pid assignment
-    // must be frozen once and shared by both passes; pass 1's collect
-    // materializes it.
+    // literal range buckets (see RangeBuckets): __pid is a pure
+    // projection, so both passes align by construction and equal keys
+    // never straddle a bucket boundary (the tie invariant the rank
+    // arithmetic builds on)
     val firstType = df.select(order.head).schema.head.dataType
-    val (parted, snapshot) = RangeBuckets.bucketOrSnapshot(
+    val parted = RangeBuckets.bucket(
       keyed, firstType, okNames.head, okCols, numParts)
 
     // pass 1: per-partition row + distinct-key counts (one row/partition)
@@ -202,16 +145,14 @@ object GlobalRank extends SnapshotRegistry {
           "position-dependent; add a tiebreaker key")
     }
     // empty input: no stats rows → typedLit of an empty map has no value
-    // type to infer; short-circuit with the same (empty) schema (and
-    // release the snapshot — nothing references it)
+    // type to infer; short-circuit with the same (empty) schema
     if (total == 0L) {
-      snapshot.foreach(_.unpersist(blocking = false))
       return (df
         .withColumn(rankName, lit(null).cast("long"))
         .withColumn(denseName, lit(null).cast("long"))
         .withColumn(pctName, lit(null).cast("double"))
         .withColumn(cumeName, lit(null).cast("double"))
-        .filter(lit(false)), None, 0L)
+        .filter(lit(false)), 0L)
     }
     val rowOff = stats.map(_._1).zip(stats.scanLeft(0L)(_ + _._2).init).toMap
     val keyOff = stats.map(_._1).zip(stats.scanLeft(0L)(_ + _._3).init).toMap
@@ -250,22 +191,6 @@ object GlobalRank extends SnapshotRegistry {
       .withColumn(denseName, drnk)
       .withColumn(pctName, prnk)
       .withColumn(cumeName, cume)
-      .drop(okNames :+ "__pid": _*), snapshot, total)
-  }
-
-  /** Loan-pattern twin of [[withGlobalRanks]] that releases the snapshot
-    * cache once `use` returns — for callers that consume the ranked
-    * frame in one scope and don't want the MEMORY_AND_DISK snapshot to
-    * outlive it. (The plain variant leaves the cache alive because the
-    * returned plan reads THROUGH it: unpersisting early would let a
-    * later action re-derive range boundaries — job-specific — and
-    * silently corrupt ranks; see the alignment scaladoc above.) */
-  def withGlobalRanksManaged[A](df: DataFrame, order: Seq[Column],
-                                rankName: String = "rnk", denseName: String = "drnk",
-                                pctName: String = "prnk", cumeName: String = "cdist")
-                               (use: DataFrame => A): A = {
-    val (ranked, snapshot, _) = build(df, order, rankName, denseName, pctName, cumeName)
-    try use(ranked)
-    finally snapshot.foreach(_.unpersist(blocking = false))
+      .drop(okNames :+ "__pid": _*), total)
   }
 }

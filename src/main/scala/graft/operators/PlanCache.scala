@@ -13,37 +13,47 @@ import org.apache.spark.storage.StorageLevel
   * it twice more inside each scan). Pinning the shared frame turns that
   * into one kernel pass plus cache reads.
   *
-  * Values are unchanged — the pinned frame is deterministic, and a lost
-  * block simply recomputes (unlike the range-bucket snapshots, there is
-  * no cross-job alignment to lose). Lifecycle is the established
-  * [[SnapshotRegistry]] contract: harnesses release every pin between
-  * queries via [[GlobalOps.releaseSnapshots]]; library callers that
-  * execute a returned plan later simply pay a recompute on a released
-  * pin — never a wrong answer.
+  * The engine's ONE persist lifecycle (the global window operators pin
+  * nothing — their buckets are literal projections): a pin is a pure
+  * cost trade, never part of a result's correctness. The pinned frame is
+  * deterministic, so a released or evicted pin costs a recompute, never
+  * a wrong answer — which is what makes [[releaseSnapshots]] safe to
+  * call at any time, from any thread, even while another query reading
+  * a pin is running.
   *
-  * Library use WITHOUT a harness (ADVICE r21): pins accumulate until
-  * `GlobalOps.releaseSnapshots()` or session end — a long-running
-  * embedder process should call the release between logical batches
-  * (after the consuming actions finish), or disable pinning wholesale
-  * via SPARK_GRAFT_NO_PINS=1; both are safe because a released pin only
-  * ever costs a recompute. Pins deliberately wrap INTERNAL projections,
+  * Harnesses release every pin between queries via
+  * [[GlobalOps.releaseSnapshots]]. A long-running embedder process
+  * should call it between logical batches; without it, pins accumulate
+  * until session end. Pins deliberately wrap INTERNAL projections,
   * never caller-supplied frames, so a release can't unpersist a cache
   * entry the caller created and still depends on. */
-object PlanCache extends SnapshotRegistry {
+object PlanCache {
 
-  /** Diagnostic kill-switch (A/B tool, not a tuning knob): with
-    * SPARK_GRAFT_NO_PINS=1 every pin is a no-op, so pinned-vs-unpinned
-    * can be measured from ONE build in two JVMs — results are identical
-    * either way (the pins are a pure cost trade). */
-  private val disabled = sys.env.get("SPARK_GRAFT_NO_PINS").contains("1")
+  private val pins = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
 
-  /** Persist `df` (MEMORY_AND_DISK) and register it for harness
-    * release. Returns `df` itself for inline use. */
-  def pinned(df: DataFrame): DataFrame = {
-    if (!disabled) {
+  /** Persist `df` (MEMORY_AND_DISK) and register it for release, once: a
+    * plan already cached (an equal plan pinned earlier, or cached by the
+    * caller) is neither re-persisted nor registered again. Returns `df`
+    * itself for inline use. */
+  def pinned(df: DataFrame): DataFrame = pins.synchronized {
+    if (df.storageLevel == StorageLevel.NONE) {
       df.persist(StorageLevel.MEMORY_AND_DISK)
-      register(Some(df))
+      pins += df
     }
     df
   }
+
+  /** Unpersist every registered pin. Returns the number released. */
+  def releaseSnapshots(): Int = pins.synchronized {
+    pins.foreach(_.unpersist(blocking = false))
+    val n = pins.size
+    pins.clear()
+    n
+  }
+}
+
+/** The harness entry point Bench/BenchOne/Verify/ExplainQuery call
+  * between queries (kept as the stable name external harnesses use). */
+object GlobalOps {
+  def releaseSnapshots(): Int = PlanCache.releaseSnapshots()
 }

@@ -3,58 +3,84 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Deterministic split-point range bucketing, shared by [[GlobalRank]]
-  * and [[GlobalShift]] (the two-pass global operators).
+/** Deterministic range bucketing for the two-pass global operators
+  * ([[GlobalRank]], [[GlobalShift]], [[GlobalCumSum]]): stamps every
+  * row with a bucket id `__pid` that is a PURE PROJECTION of the row
+  * against literal boundaries captured once on the driver.
   *
   * The problem it solves: Spark's `repartitionByRange` samples its
   * boundaries PER MATERIALIZATION, so two jobs planning the same range
-  * exchange can disagree on which side of a cut a tie group falls —
-  * cross-job alignment then requires persisting the partitioned frame,
-  * which at 100 TB means materializing a full-width copy of the table.
-  *
-  * The fix: when the first order key is orderable into long/double,
-  * compute ~numParts quantile split points ONCE (one approxQuantile job
-  * over a scan pruned to that key), snap them into the key's own type,
-  * and stamp the bucket id as a PURE PROJECTION against the literal
-  * boundaries. Every job then derives the identical bucket for every
-  * row by construction — nothing persists, nothing can misalign. The
-  * split values themselves need not be exact or reproducible (they are
-  * captured once as literals; balance is the only thing at stake).
+  * exchange can disagree on which side of a cut a tie group falls, and
+  * pass 1's per-bucket facts would then not describe pass 2's buckets.
+  * Literal boundaries make every job derive the identical bucket for
+  * every row by construction — nothing persists, nothing can misalign.
+  * The boundary values themselves need not be exact or reproducible
+  * (they are captured once as literals; balance is the only thing at
+  * stake).
   *
   * Contiguity and ties: bucket b holds exactly the rows with
-  * splits(b-1) <= key < splits(b), so buckets are contiguous in the
-  * global order and EQUAL FIRST KEYS NEVER STRADDLE a bucket boundary —
-  * the invariant both global rank (tie groups stay together) and global
-  * shift (boundary hand-off) build on. Only balance degrades under
-  * heavy first-key ties; a key too coarse to fill ~numParts buckets is
-  * rejected (None) and callers fall back to the sampled full-tuple
-  * range partitioner + persisted snapshot, which can use the remaining
-  * order keys to split ties. */
+  * bound(b-1) <= key < bound(b), so buckets are contiguous in the
+  * global order and EQUAL KEYS NEVER STRADDLE a bucket boundary — the
+  * invariant both global rank (tie groups stay together) and global
+  * shift (boundary hand-off) build on.
+  *
+  * Two ways to get the boundaries:
+  *   - [[tryBucket]], the split-point ladder: when the first order key
+  *     has a monotone long/double image (integral, timestamp, date,
+  *     float, decimal, string prefix), one approxQuantile job over a
+  *     scan pruned to that key gives ~numParts split points. Heavy
+  *     first-key ties only degrade balance.
+  *   - [[tupleBounds]], the fallback for every other case (boolean or
+  *     struct keys, and keys too coarse to fill ~numParts buckets): the
+  *     minimum full order tuple of each range partition, compared as a
+  *     struct literal, so the remaining order keys can split first-key
+  *     ties. */
 private[operators] object RangeBuckets {
 
-  /** The full tier selection both global operators run: the split-point
-    * tier when [[tryBucket]] accepts, else the sampled full-tuple range
-    * partitioner with a persisted MEMORY_AND_DISK snapshot (the frame
-    * the caller must keep cached while its plan is executable). Returns
-    * (pid-stamped frame, Some(snapshot) on the legacy tier). */
-  def bucketOrSnapshot(keyed: DataFrame,
-                       firstOrderType: org.apache.spark.sql.types.DataType,
-                       firstOkName: String, okCols: Seq[Column],
-                       numParts: Int): (DataFrame, Option[DataFrame]) =
-    tryBucket(keyed, firstOrderType, firstOkName, numParts) match {
-      case Some(p) => (p, None)
-      case None =>
-        val p = keyed.repartitionByRange(numParts, okCols: _*)
-          .withColumn("__pid", spark_partition_id())
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        (p, Some(p))
-    }
+  /** `keyed` stamped with `__pid` (int, 0-based in bucket order): the
+    * split-point ladder when it accepts, else literal full-tuple
+    * bounds. `okCols` are the order-key columns already on `keyed`;
+    * `firstOkName` names the first of them. */
+  def bucket(keyed: DataFrame,
+             firstOrderType: org.apache.spark.sql.types.DataType,
+             firstOkName: String, okCols: Seq[Column],
+             numParts: Int): DataFrame =
+    tryBucket(keyed, firstOrderType, firstOkName, numParts)
+      .getOrElse(tupleBounds(keyed, okCols, numParts))
 
-  /** Stamp `keyed` with a deterministic contiguous-range bucket id
-    * `__pid` (int, 0-based in bucket order) derived from literal split
-    * points of the first order key, or None when the key type is not
-    * orderable to long/double or too coarse for ~numParts buckets. */
-  def tryBucket(keyed: DataFrame,
+  /** Literal full-tuple bounds in one job: the minimum `struct(okCols)`
+    * of each partition of a range repartition on the order tuple (at
+    * most numParts rows to the driver), in partition order, deduped,
+    * smallest dropped (every row is >= it). `__pid` counts the bounds a
+    * row's tuple reaches. Struct comparison uses the window sort's own
+    * ordering — ascending, nulls first, NaN last, -0.0 = 0.0 — so a
+    * bucket is a contiguous run of the sort and equal tuples share it.
+    * The partitioner only shapes balance: any bound set yields
+    * contiguous buckets. No bounds (empty or single-partition input)
+    * stamps 0 everywhere. */
+  private def tupleBounds(keyed: DataFrame, okCols: Seq[Column],
+                          numParts: Int): DataFrame = {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.graftshim.Shim
+    val tuple = struct(okCols: _*)
+    val tupleType = keyed.select(tuple).schema.head.dataType
+    val bounds = keyed.select(okCols: _*)
+      .repartitionByRange(numParts, okCols: _*)
+      .groupBy(spark_partition_id().as("__p"))
+      .agg(min(tuple).as("__m"))
+      .collect().sortBy(_.getInt(0)).map(_.get(1)).distinct.drop(1)
+    val pid = bounds.map { b =>
+      when(tuple >= Shim.toColumn(Literal.create(b, tupleType)), 1)
+        .otherwise(0)
+    }.foldLeft(lit(0))(_ + _)
+    keyed.withColumn("__pid", pid)
+  }
+
+  /** The split-point ladder: `keyed` stamped with `__pid` derived from
+    * literal split points of the first order key, or None when the key
+    * type has no long/double image or is too coarse for ~numParts
+    * buckets. */
+  private def tryBucket(keyed: DataFrame,
                 firstOrderType: org.apache.spark.sql.types.DataType,
                 firstOkName: String, numParts: Int): Option[DataFrame] = {
     import org.apache.spark.sql.types._
@@ -70,8 +96,7 @@ private[operators] object RangeBuckets {
       case dt: DecimalType if dt.precision <= 18 && dt.scale >= 0 =>
         // exact unscaled-long image: v·10^s is integer-valued and fits
         // a long for decimal(p ≤ 18, s) — injective, so the tier loses
-        // nothing (decimal money keys were the last common type still
-        // paying the persisted-snapshot path, VERDICT r16 #4)
+        // nothing
         Some(((col(firstOkName) *
           lit(scala.math.BigDecimal(10).pow(dt.scale))).cast("long"), true))
       case _: DecimalType =>
@@ -82,12 +107,10 @@ private[operators] object RangeBuckets {
       case StringType =>
         stringPrefixKey(keyed, firstOkName)
       // Everything else — boolean (≤2 distinct values can never fill
-      // ~numParts buckets), struct/array/map keys, and degenerate inputs
+      // ~numParts buckets), struct/array keys, and degenerate inputs
       // (all-null or single-distinct keys, rejected below/in the string
-      // probe) — deliberately falls to the legacy sampled+persisted tier:
-      // it is the universal fallback that can use the FULL order tuple to
-      // split ties, so it stays (decision recorded in SURVEY §2.6), and
-      // its snapshot lifecycle is pinned by the struct-keyed suite tests.
+      // probe) — takes [[tupleBounds]], which splits ties on the FULL
+      // order tuple.
       case _ => None
     }
     bk.flatMap { case (bkCol, integral) =>
@@ -154,8 +177,8 @@ private[operators] object RangeBuckets {
   private val PrefixBytes = 6
 
   /** Monotone long image of a STRING first key — the binary-prefix tier
-    * (closes the last persisted-snapshot path for the common crawl-scale
-    * case of text order keys: URL, domain, doc id).
+    * for the common crawl-scale case of text order keys: URL, domain,
+    * doc id.
     *
     * Under the default binary collation Spark compares strings bytewise
     * unsigned on UTF-8, so "first K bytes as a big-endian integer" is a
@@ -171,7 +194,7 @@ private[operators] object RangeBuckets {
     * prefix, so ordering within the corpus is decided from byte L+1 on,
     * and the image takes [[PrefixBytes]] bytes from there. min = max
     * (single distinct key) is rejected as too coarse; all-null keys
-    * likewise (the legacy sampled tier handles both).
+    * likewise ([[tupleBounds]] handles both).
     *
     * The image is computed per row as a pure projection:
     * `conv(rpad(hex(substring(utf8, L+1, 6)), 12, '0'), 16, 10)` —

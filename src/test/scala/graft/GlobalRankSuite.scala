@@ -26,17 +26,19 @@ class GlobalRankSuite extends SparkSpec {
     .select(((col("id") * 379) % 10007).as("v"), col("id").as("rid"))
     .repartition(5)
 
-  private def naive(df: org.apache.spark.sql.DataFrame) = {
-    val w = Window.orderBy(col("v"))
+  private def naive(df: org.apache.spark.sql.DataFrame,
+                    order: Seq[String] = Seq("v")) = {
+    val w = Window.orderBy(order.map(col): _*)
     df.withColumn("e_rnk", rank().over(w).cast("long"))
       .withColumn("e_drnk", dense_rank().over(w).cast("long"))
       .withColumn("e_prnk", percent_rank().over(w))
       .withColumn("e_cdist", cume_dist().over(w))
   }
 
-  private def checkParity(df: org.apache.spark.sql.DataFrame): Unit = {
-    val got = GlobalRank.withGlobalRanks(df, Seq(col("v")))
-    val both = got.join(naive(df), "rid").collect()
+  private def checkParity(df: org.apache.spark.sql.DataFrame,
+                          order: Seq[String] = Seq("v")): Unit = {
+    val got = GlobalRank.withGlobalRanks(df, order.map(col))
+    val both = got.join(naive(df, order), "rid").collect()
     assert(both.length == df.count())
     both.foreach { r =>
       assert(r.getAs[Long]("rnk") == r.getAs[Long]("e_rnk"), s"rank: $r")
@@ -64,34 +66,30 @@ class GlobalRankSuite extends SparkSpec {
     assert(r.getAs[Double]("prnk") == 0.0 && r.getAs[Double]("cdist") == 1.0)
 
     val empty = spark.emptyDataFrame.withColumn("v", lit(0L))
-    val live0 = GlobalRank.liveSnapshotCount
-    val e = GlobalRank.withGlobalRanks(empty, Seq(col("v")))
-    assert(e.count() == 0L)
+    val (e, pinned) = persistedDuring {
+      val e = GlobalRank.withGlobalRanks(empty, Seq(col("v")))
+      assert(e.count() == 0L)
+      e
+    }
     assert(e.columns.toSeq == Seq("v", "rnk", "drnk", "prnk", "cdist"))
-    // the empty-input short-circuit pins nothing — it must not register
-    // a dead handle that makes liveSnapshotCount over-report
-    assert(GlobalRank.liveSnapshotCount == live0)
+    assert(pinned.isEmpty, s"empty input persisted $pinned")
   }
 
   test("plan: partitioned exchange, no SinglePartition anywhere") {
-    // high-card long key -> split-point tier: the exchange hashes the
-    // deterministic __pid buckets (legacy tier would show
-    // rangepartitioning); either way, never SinglePartition
+    // the exchange hashes the deterministic __pid buckets — never
+    // SinglePartition
     val plan = GlobalRank.withGlobalRanks(uniq, Seq(col("v")))
       .queryExecution.executedPlan.toString
     val lower = plan.toLowerCase
-    assert(lower.contains("hashpartitioning(__pid") ||
-      lower.contains("rangepartitioning"), s"plan:\n$plan")
+    assert(lower.contains("hashpartitioning(__pid"), s"plan:\n$plan")
     assert(!plan.contains("SinglePartition"), s"plan:\n$plan")
   }
 
   test("split-point tier: no snapshot pinned, release reports none, parity exact") {
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val (ranked, release) = GlobalRank.withGlobalRanksReleasable(uniq, Seq(col("v")))
-    assert(ranked.count() == 1000L)
-    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty,
-      "split-point tier must not persist anything")
-    assert(!release(), "nothing to release on the split-point tier")
+    val (n, pinned) = persistedDuring(
+      GlobalRank.withGlobalRanks(uniq, Seq(col("v"))).count())
+    assert(n == 1000L)
+    assert(pinned.isEmpty, "split-point tier must not persist anything")
     checkParity(uniq)
   }
 
@@ -103,12 +101,10 @@ class GlobalRankSuite extends SparkSpec {
       .select(date_add(lit("2020-01-01").cast("date"),
         ((col("id") * 379) % 1500).cast("int")).as("v"), col("id").as("rid"))
       .repartition(5)
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val (ranked, release) = GlobalRank.withGlobalRanksReleasable(dated, Seq(col("v")))
-    assert(ranked.count() == 1000L)
-    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty,
-      "date split-point tier must not persist anything")
-    assert(!release(), "nothing to release on the date split tier")
+    val (n, pinned) = persistedDuring(
+      GlobalRank.withGlobalRanks(dated, Seq(col("v"))).count())
+    assert(n == 1000L)
+    assert(pinned.isEmpty, "date split-point tier must not persist anything")
     checkParity(dated)
   }
 
@@ -123,12 +119,10 @@ class GlobalRankSuite extends SparkSpec {
         format_string("%05d", (col("id") * 379) % 10007)).as("v"),
         col("id").as("rid"))
       .repartition(5)
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val (ranked, release) = GlobalRank.withGlobalRanksReleasable(urls, Seq(col("v")))
-    assert(ranked.count() == 1000L)
-    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty,
-      "string split-point tier must not persist anything")
-    assert(!release(), "nothing to release on the string split tier")
+    val (n, pinned) = persistedDuring(
+      GlobalRank.withGlobalRanks(urls, Seq(col("v"))).count())
+    assert(n == 1000L)
+    assert(pinned.isEmpty, "string split-point tier must not persist anything")
     val plan = GlobalRank.withGlobalRanks(urls, Seq(col("v")))
       .queryExecution.executedPlan.toString
     val lower = plan.toLowerCase
@@ -141,15 +135,16 @@ class GlobalRankSuite extends SparkSpec {
 
   test("single-distinct-value string key falls back to the legacy tier, stays exact") {
     // min == max -> the prefix image is degenerate by construction; the
-    // tier must reject and the sampled legacy path must still rank
-    // (ties broken by nothing — all rank 1)
+    // split-point ladder rejects it and the full-tuple bounds fallback
+    // must still rank (ties broken by nothing — all rank 1), persisting
+    // nothing
     val const = spark.range(100)
       .select(lit("https://only.example.com/").as("v"), col("id").as("rid"))
       .repartition(3)
-    val (ranked, release) = GlobalRank.withGlobalRanksReleasable(const, Seq(col("v")))
-    val rows = ranked.collect()
+    val (rows, pinned) = persistedDuring(
+      GlobalRank.withGlobalRanks(const, Seq(col("v"))).collect())
     assert(rows.length == 100 && rows.forall(_.getAs[Long]("rnk") == 1L))
-    assert(release(), "legacy tier pins a snapshot the caller releases")
+    assert(pinned.isEmpty, s"bounds fallback persisted $pinned")
   }
 
   test("parity holds under AQE with coalescing forced (cross-job alignment)") {
@@ -172,10 +167,8 @@ class GlobalRankSuite extends SparkSpec {
       conf.set("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "64")
       checkParity(tied)
       checkParity(uniq)
-      // struct keys FORCE the legacy sampled-range + persist tier — the
-      // path whose alignment this test was written to pin (numeric,
-      // decimal, date, AND string keys now take split-point tiers, where
-      // misalignment is impossible)
+      // struct keys take the full-tuple bounds fallback (numeric,
+      // decimal, date, and string keys take the split-point ladder)
       checkParity(tied.select(struct(col("v")).as("v"), col("rid")))
       // the decimal unscaled-long split tier under the same AQE pressure
       checkParity(tied.select(
@@ -203,11 +196,11 @@ class GlobalRankSuite extends SparkSpec {
         .repartition(9)
         .write.mode("overwrite").parquet(dir)
       checkParity(spark.read.parquet(dir))
-      // legacy-tier twin: struct keys (same values, same heavy ties) go
-      // through the sampled range partitioner + persisted snapshot — the
-      // exact r10 regression this test exists for (decimal(12,2) rides
-      // the r17 unscaled-long split tier now; keep it as that tier's
-      // tie-heavy parquet parity pin)
+      // struct keys (same values, same heavy ties) take the full-tuple
+      // bounds fallback, whose one bounds job samples the same unstable
+      // range partitioner — but only to pick literal bounds, so the stats
+      // and rank jobs still agree (decimal(12,2) rides the unscaled-long
+      // split tier; keep it as that tier's tie-heavy parquet parity pin)
       checkParity(spark.read.parquet(dir).select(
         struct(col("v")).as("v"), col("rid")))
       checkParity(spark.read.parquet(dir).select(
@@ -221,59 +214,44 @@ class GlobalRankSuite extends SparkSpec {
     }
   }
 
-  test("managed variant releases the snapshot cache after use") {
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val n = GlobalRank.withGlobalRanksManaged(tied, Seq(col("v"))) { ranked =>
-      assert(ranked.filter(col("rnk").isNull).count() == 0)
-      ranked.count()
+  test("struct key: withGlobalRanks adds no persisted RDD, stays exact") {
+    // struct keys take the full-tuple bounds fallback
+    val tiedS = tied.select(struct(col("v")).as("v"), col("rid"))
+    val (_, pinned) = persistedDuring {
+      checkParity(tiedS)
+      assert(GlobalRank.withGlobalRanks(tiedS, Seq(col("v")))
+        .filter(col("rnk").isNull).count() == 0L)
     }
-    assert(n == 400L)
-    val after = spark.sparkContext.getPersistentRDDs.keySet
-    assert((after -- before).isEmpty, s"leaked cached RDDs: ${after -- before}")
+    assert(pinned.isEmpty, s"struct key persisted $pinned")
   }
 
   test("bench-loop shape: N plain invocations + releaseSnapshots leave zero live snapshots") {
-    // Bench/Verify run each query (a plain withGlobalRanks call), consume
-    // the result fully, then call releaseSnapshots() — after the loop no
-    // snapshot may stay pinned and no cached RDD may leak.
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    GlobalRank.releaseSnapshots() // isolate from any earlier plain calls
+    // Bench/Verify run each query, consume the result fully, then call
+    // releaseSnapshots(); a global rank leaves nothing for it to free
+    val tiedS = tied.select(struct(col("v")).as("v"), col("rid"))
     (1 to 3).foreach { _ =>
-      val ranked = GlobalRank.withGlobalRanks(tied, Seq(col("v")))
-      assert(ranked.count() == 400L) // consume before release
-      GlobalRank.releaseSnapshots()
+      val (n, pinned) = persistedDuring(
+        GlobalRank.withGlobalRanks(tiedS, Seq(col("v"))).count())
+      assert(n == 400L)
+      assert(pinned.isEmpty, s"plain call persisted $pinned")
+      graft.operators.GlobalOps.releaseSnapshots()
     }
-    assert(GlobalRank.liveSnapshotCount == 0)
-    assert(GlobalRank.releaseSnapshots() == 0) // nothing left to release
-    val after = spark.sparkContext.getPersistentRDDs.keySet
-    assert((after -- before).isEmpty, s"leaked cached RDDs: ${after -- before}")
   }
 
-  test("releasable handle frees only its own snapshot, idempotently") {
-    // the per-call alternative to the process-wide wipe: two concurrent
-    // callers must not be able to unpersist each other's snapshot
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val live0 = GlobalRank.liveSnapshotCount
-    // struct keys -> always the legacy persist tier (numeric, decimal,
-    // date, and string keys all take split-point tiers now, which pin
-    // nothing and are tested separately); struct(v) orders exactly as v
-    val tiedS = tied.select(struct(col("v")).as("v"), col("rid"))
-    val uniqS = uniq.select(struct(col("v")).as("v"), col("rid"))
-    val (r1, rel1) = GlobalRank.withGlobalRanksReleasable(tiedS, Seq(col("v")))
-    val (r2, rel2) = GlobalRank.withGlobalRanksReleasable(uniqS, Seq(col("v")))
-    assert(r1.count() == 400L && r2.count() == 1000L)
-    val pinned = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(pinned.size == 2, s"expected 2 pinned snapshots, got $pinned")
-    assert(rel1())
-    assert(!rel1(), "second release must be a no-op")
-    val remaining = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(remaining.size == 1, "releasing call 1 must not touch call 2")
-    // call 2 is untouched and still consumable
-    assert(r2.filter(col("rnk").isNull).count() == 0L)
-    assert(rel2())
-    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty)
-    // handle-managed snapshots never enter the plain-call registry
-    assert(GlobalRank.liveSnapshotCount == live0)
+  test("boolean and single-distinct keys: withGlobalRanks adds no persisted RDD") {
+    // both are rejected by the split-point ladder (too coarse); the
+    // bounds fallback splits the boolean key's ties on the second key
+    val boolKeyed = uniq.select((col("v") % 3 === 0).as("b"), col("v"),
+      col("rid"))
+    val single = spark.range(100)
+      .select(lit(7L).as("v"), col("id").as("rid")).repartition(3)
+    val (rows, pinned) = persistedDuring {
+      checkParity(boolKeyed, Seq("b", "v"))
+      checkParity(single)
+      GlobalRank.withGlobalRanks(single, Seq(col("v"))).collect()
+    }
+    assert(rows.length == 100 && rows.forall(_.getAs[Long]("rnk") == 1L))
+    assert(pinned.isEmpty, s"coarse keys persisted $pinned")
   }
 
   test("misalignment guard is wired: offset lookup raises instead of nulling") {

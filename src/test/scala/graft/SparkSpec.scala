@@ -53,6 +53,15 @@ trait SparkSpec extends AnyFunSuite {
 
   def rowCount(df: DataFrame): Long = df.count()
 
+  /** Runs `body` and returns its result with the ids of the RDDs it left
+    * persisted that were not persisted before. */
+  def persistedDuring[T](body: => T): (T, Set[Int]) = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val r = body
+    (r, sc.getPersistentRDDs.keySet.toSet -- before)
+  }
+
   /** Runs `body` and returns its result with the call site of every
     * Spark job it launched. Jobs are matched by a fresh job group; a
     * sentinel job in a second group runs afterwards, and since the

@@ -21,6 +21,15 @@ if grep -rn --include='*.scala' 'read\.parquet(' src/main \
   exit 1
 fi
 
+# The global window operators bucket rows by literal range bounds, so
+# nothing in them persists; PlanCache is the one place that pins.
+echo "== gate: global window operators never persist =="
+if grep -nE 'persist\(|cache\(\)' src/main/scala/graft/operators/Global*.scala \
+    src/main/scala/graft/operators/RangeBuckets.scala; then
+  echo "gate: FAIL — global window operators must not persist; pin via PlanCache" >&2
+  exit 1
+fi
+
 echo "== gate: Test/compile + suite =="
 sbt -batch 'Test/compile' test
 
